@@ -3,8 +3,10 @@
 The reference runs its FADS ProcessFunction at parallelism 1 over an
 unbounded stream (TransactionGeneralizationJob.java:40, Generalizer.java).
 The batch equivalent is ``groupBy(<one group>).applyInPandas(...)`` over
-arrival-sorted rows — one Arrow batch stream through the sequential state
-machine in :mod:`pyfads.fads_core`.
+arrival-sorted rows: :func:`run_fads_pandas` feeds the whole group to one
+``process()`` call of :class:`pyfads.fads_core.FADSState` — the same engine
+the streaming drivers in :mod:`pyfads.fads_stream` run once per
+micro-batch — and :func:`release_frame` builds the output frame for both.
 
 Two modes:
 
@@ -22,8 +24,6 @@ Two modes:
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
@@ -35,238 +35,56 @@ from pyfads.schema import fads_output_schema
 __all__ = ["fads_generalize", "fads_generalize_partitioned", "run_fads_pandas"]
 
 
-def _assemble(pdf: pd.DataFrame, batches: Iterable[ReleasedBatch], cfg: FADSConfig) -> pd.DataFrame:
-    """Build the output frame: passthrough cols by released row position,
-    plus <qid>_lo/<qid>_hi columns."""
-    row_ids: list[int] = []
-    los: list[np.ndarray] = []
-    his: list[np.ndarray] = []
-    for b in batches:
-        row_ids.extend(b.row_ids)
-        los.extend(b.lo)
-        his.extend(b.hi)
-    idx = np.asarray(row_ids, dtype=np.int64)
-    lo_m = np.vstack(los) if los else np.empty((0, len(cfg.qid_cols)))
-    hi_m = np.vstack(his) if his else np.empty((0, len(cfg.qid_cols)))
-
-    out = {}
-    for col in pdf.columns:
-        if col in cfg.qid_cols:
-            continue
-        out[col] = pdf[col].to_numpy()[idx]
-    for j, q in enumerate(cfg.qid_cols):
-        out[f"{q}_lo"] = lo_m[:, j]
-        out[f"{q}_hi"] = hi_m[:, j]
-    # column order must match fads_output_schema: input order with each QID
-    # expanded in place
-    cols = []
-    for col in pdf.columns:
-        if col in cfg.qid_cols:
-            cols += [f"{col}_lo", f"{col}_hi"]
-        else:
-            cols.append(col)
-    return pd.DataFrame(out)[cols]
-
-
-def run_fads_pandas(
-    pdf: pd.DataFrame, cfg: FADSConfig, engine: str = "fast"
-) -> pd.DataFrame:
-    """Run the full FADS loop + flush over one pandas partition (one group).
-
-    ``engine='fast'`` (default) is the batch-specialized inner loop
-    (:func:`_process_batch`): identical semantics and bit-identical output
-    to the incremental :class:`pyfads.fads_core.FADSState` (``engine=
-    'state'``, which remains the streaming core), ~3x faster on large
-    partitions because global bounds are prefix-accumulated once and the
-    buffer is gathered by index instead of re-stacked per release.  The two
-    engines are pinned equal by ``tests/test_fads_batch.py`` and both are
-    checked against the independent pure-Python oracle.
-    """
-    pdf = pdf.sort_values([cfg.arrival_col, cfg.pid_col], kind="mergesort").reset_index(
-        drop=True
-    )
-    qids = pdf[list(cfg.qid_cols)].to_numpy(dtype=np.float64)
-    arrivals = pdf[cfg.arrival_col].to_numpy(dtype=np.int64)
-    pids = pdf[cfg.pid_col].to_numpy()
+def process_frame(state: FADSState, pdf: pd.DataFrame, row_ids, pids=None) -> ReleasedBatch:
+    """Feed an arrival-sorted frame's QID, arrival and (in ``legacy_distance``
+    mode) distance columns to ``state.process``."""
+    cfg = state.cfg
     legacy = None
     if cfg.legacy_distance:
-        lcols = list(cfg.legacy_distance_cols or cfg.qid_cols)
-        legacy = pdf[lcols].to_numpy(dtype=np.float64)
-    if engine == "fast":
-        released, tail = _process_batch(
-            np.arange(len(pdf)), qids, arrivals, pids, legacy, cfg
-        )
-    else:
-        state = FADSState(cfg)
-        released = state.process(
-            np.arange(len(pdf)), qids, arrivals, pids=pids, legacy_vals=legacy
-        )
-        tail = state.flush()
-    return _assemble(pdf, (released, tail), cfg)
+        legacy = pdf[list(cfg.legacy_distance_cols or cfg.qid_cols)].to_numpy(dtype=np.float64)
+    return state.process(
+        row_ids,
+        pdf[list(cfg.qid_cols)].to_numpy(dtype=np.float64),
+        pdf[cfg.arrival_col].to_numpy(dtype=np.int64),
+        pids=pids,
+        legacy_vals=legacy,
+    )
 
 
-def _process_batch(row_ids, qids, arrivals, pids, legacy_vals, cfg: FADSConfig):
-    """Batch-specialized FADS inner loop — the same per-row semantics as
-    ``FADSState.process`` + ``flush`` (G1-G12, G14; see pyfads/fads_core.py
-    for the reference file:line map), restructured for throughput:
-
-    - global min/max bounds (G2) are ``np.minimum/maximum.accumulate`` over
-      the whole partition up front — O(1) lookup per row instead of two
-      numpy calls per row;
-    - the buffer holds row *indices*; per release the QID block is one
-      fancy-index gather instead of ``np.stack`` over a deque of tuples;
-    - guarded divisions use ``np.divide(..., where=..., out=zeros)`` —
-      bit-identical results to the ``np.where`` forms in fads_core without
-      an ``np.errstate`` context switch per release;
-    - clusters live in parallel lists with a head pointer for TTL expiry
-      (creation times are nondecreasing), and fits/infoLoss/argmin run
-      vectorized over the live slice (first minimum == first-created wins,
-      matching the strict-< walk).
-
-    Every float op keeps the exact operation order of fads_core (division
-    by the range, mean over dims), so released intervals are bit-identical
-    — pinned by the engine-equivalence and golden-oracle tests.
-    """
-    n, d = qids.shape
-    B = cfg.buffer_rows
-    k1 = cfg.k - 1
-    reuse = cfg.reuse_ms
-    if legacy_vals is None:
-        legacy_vals = qids
-    glo_acc = np.minimum.accumulate(qids, axis=0) if n else qids
-    ghi_acc = np.maximum.accumulate(qids, axis=0) if n else qids
-
-    buf: list[int] = []  # row indices, arrival order (G1)
-    cl_lo: list[np.ndarray] = []  # clusters in creation order (G3)
-    cl_hi: list[np.ndarray] = []
-    cl_created: list[int] = []
-    cl_head = 0
-    released = ReleasedBatch()
-    tail = ReleasedBatch()
-    glo = ghi = None  # current global bounds (views into the accumulates)
-
-    def best_fitting(q):
-        """G7+G8+G9 over the live clusters, vectorized; returns index into
-        cl_lo/cl_hi or -1."""
-        m = len(cl_lo) - cl_head
-        if m == 0:
-            return -1
-        los = np.asarray(cl_lo[cl_head:])
-        his = np.asarray(cl_hi[cl_head:])
-        fits = np.all(q > los, axis=1) & np.all(q < his, axis=1)
-        if not fits.any():
-            return -1
-        grange = ghi - glo
-        nz = grange > 0
-        diffs = his - los
-        ils = np.divide(diffs, grange, out=np.zeros_like(diffs), where=nz).mean(axis=1)
-        ils[~fits] = np.inf
-        return cl_head + int(np.argmin(ils))  # first min == first-created
-
-    def info_loss(lo, hi):
-        grange = ghi - glo
-        nz = grange > 0
-        diff = hi - lo
-        return float(
-            np.divide(diff, grange, out=np.zeros_like(diff), where=nz).mean()
-        )
-
-    def release_oldest(out: ReleasedBatch, now: int) -> None:
-        pivot = buf.pop(0)
-        q = qids[pivot]
-        if len(buf) < k1:
-            ci = best_fitting(q)
-            out.row_ids.append(row_ids[pivot])
-            if ci >= 0:
-                out.lo.append(cl_lo[ci])
-                out.hi.append(cl_hi[ci])
-            else:  # G11 suppress: snapshot of the current global bounds
-                out.lo.append(glo.copy())
-                out.hi.append(ghi.copy())
-            return
-
-        bidx = np.asarray(buf, dtype=np.int64)
-        buf_q = qids[bidx]
-        if cfg.legacy_distance:
-            # shipped-bug parity: (abs(delta)/hi)-lo, no zero guard
-            l_buf = legacy_vals[bidx]
-            lq = legacy_vals[pivot]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                per_dim = np.abs(l_buf - lq) / ghi - glo
-            dists = per_dim.mean(axis=1)
+def release_frame(
+    src: pd.DataFrame, pos: np.ndarray, lo: np.ndarray, hi: np.ndarray, cfg: FADSConfig, cols
+) -> pd.DataFrame:
+    """The generalizer's output for released rows: the ``cols`` of ``src`` at
+    positions ``pos``, each QID column replaced in place by its
+    ``<col>_lo``/``<col>_hi`` interval (the column order of
+    ``fads_output_schema``)."""
+    out = {}
+    for col in cols:
+        if col in cfg.qid_cols:
+            j = cfg.qid_cols.index(col)
+            out[f"{col}_lo"] = lo[:, j]
+            out[f"{col}_hi"] = hi[:, j]
         else:
-            grange = ghi - glo
-            nz = grange > 0
-            ad = np.abs(buf_q - q)
-            dists = np.divide(ad, grange, out=np.zeros_like(ad), where=nz).mean(axis=1)
-        if cfg.distinct_pids:
-            bpids = pids[bidx]
-            chosen: list[int] = []
-            seen: set = set()
-            for j in np.argsort(dists, kind="stable"):
-                pid = bpids[j]
-                if pid in seen:
-                    continue
-                seen.add(pid)
-                chosen.append(int(j))
-                if len(chosen) == k1:
-                    break
-            if len(chosen) < k1:
-                ci = best_fitting(q)
-                out.row_ids.append(row_ids[pivot])
-                if ci >= 0:
-                    out.lo.append(cl_lo[ci])
-                    out.hi.append(cl_hi[ci])
-                else:
-                    out.lo.append(glo.copy())
-                    out.hi.append(ghi.copy())
-                return
-            order = np.asarray(chosen)
-        else:
-            order = np.argsort(dists, kind="stable")[:k1]
+            out[col] = src[col].to_numpy()[pos]
+    return pd.DataFrame(out)
 
-        nb_q = buf_q[order]
-        knn_lo = nb_q.min(axis=0)
-        knn_hi = nb_q.max(axis=0)
 
-        ci = best_fitting(q)
-        if ci >= 0 and info_loss(cl_lo[ci], cl_hi[ci]) < info_loss(knn_lo, knn_hi):
-            out.row_ids.append(row_ids[pivot])
-            out.lo.append(cl_lo[ci])
-            out.hi.append(cl_hi[ci])
-            return
-
-        nb_set = {int(j) for j in order}
-        kept: list[int] = []
-        for pos, ri in enumerate(buf):
-            if pos in nb_set:
-                out.row_ids.append(row_ids[ri])
-                out.lo.append(knn_lo)
-                out.hi.append(knn_hi)
-            else:
-                kept.append(ri)
-        buf[:] = kept
-        out.row_ids.append(row_ids[pivot])
-        out.lo.append(knn_lo)
-        out.hi.append(knn_hi)
-        cl_lo.append(knn_lo)
-        cl_hi.append(knn_hi)
-        cl_created.append(now)
-
-    now = 0
-    for i in range(n):
-        now = int(arrivals[i])
-        buf.append(i)
-        glo = glo_acc[i]
-        ghi = ghi_acc[i]
-        while cl_head < len(cl_created) and cl_created[cl_head] + reuse < now:
-            cl_head += 1
-        if len(buf) > B:
-            release_oldest(released, now)
-    # G14 end-of-stream flush: bounds frozen at the last row, no expiry
-    while buf:
-        release_oldest(tail, now)
-    return released, tail
+def run_fads_pandas(pdf: pd.DataFrame, cfg: FADSConfig) -> pd.DataFrame:
+    """Run the full FADS loop + flush over one pandas partition (one group):
+    the whole arrival-sorted partition is one ``FADSState.process`` call;
+    released rows resolve by position."""
+    pdf = pdf.sort_values([cfg.arrival_col, cfg.pid_col], kind="mergesort")
+    state = FADSState(cfg)
+    released = process_frame(state, pdf, np.arange(len(pdf)), pids=pdf[cfg.pid_col].to_numpy())
+    tail = state.flush()
+    return release_frame(
+        pdf,
+        np.concatenate((released.row_ids, tail.row_ids)),
+        np.vstack((released.lo, tail.lo)),
+        np.vstack((released.hi, tail.hi)),
+        cfg,
+        pdf.columns,
+    )
 
 
 def _check_cols(df: DataFrame, cfg: FADSConfig) -> None:

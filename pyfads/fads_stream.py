@@ -1,8 +1,10 @@
 """Streaming FADS generalization (P6 stream / G1 / G3 / G14).
 
 The reference is a Flink stateful ProcessFunction over an unbounded stream
-(Generalizer.java:48-96: open/processElement/close at parallelism 1).  The
-Structured-Streaming-native equivalents here:
+(Generalizer.java:48-96: open/processElement/close at parallelism 1).  Both
+drivers here feed each micro-batch to one ``FADSState.process`` call — the
+same engine batch runs — so a stream releases exactly what the batch run
+releases:
 
 - :func:`fads_generalize_stream` — ``groupBy(...).applyInPandasWithState``:
   the FADS state machine (:class:`pyfads.fads_core.FADSState`) plus the
@@ -12,16 +14,11 @@ Structured-Streaming-native equivalents here:
   reference's ``close()`` flush (G14, Generalizer.java:59-74).  TTL cluster
   expiry (G3) runs on the logical arrival clock inside the state machine,
   deterministic and replayable, never ``System.currentTimeMillis()``.
-- :func:`fads_generalize_stream_tws` / :class:`FADSStatefulProcessor` —
-  the same operator on Spark 4's ``transformWithStateInPandas``: the codec
-  blob lives in a named RocksDB-backed ``ValueState`` and the G14 flush is
-  a per-key processing-time timer.  The Python runtime needs
-  ``google.protobuf`` (gated; falls back to the variant above).
 - :class:`ForeachBatchFADS` — driver-side fallback per SURVEY.md §7.4.2 for
   environments without ``applyInPandasWithState``: one shared state machine
   fed by ``foreachBatch``; ``flush()`` gives the exact end-of-stream drain.
   Parity/testing tool — the state lives on the driver, so it is NOT the
-  100 TB path; the stateful-operator variants are.
+  100 TB path; :func:`fads_generalize_stream` is.
 
 Ordering contract (G1): arrival order *within* a micro-batch is restored by
 sorting on ``(arrival_col, pid_col)``; order *across* batches is the
@@ -44,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pyfads.config import FADSConfig
+from pyfads.fads_batch import process_frame, release_frame
 from pyfads.fads_core import FADSState
 from pyfads.schema import fads_output_schema
 
@@ -55,48 +53,14 @@ except ImportError:  # pragma: no cover
     GroupStateTimeout = None
     HAS_APPLY_IN_PANDAS_WITH_STATE = False
 
-try:  # Spark >= 4.0: the transformWithState stateful-processor API
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = None
-    HAS_TRANSFORM_WITH_STATE = False
-
-# The transformWithState PYTHON RUNTIME (a state-server protocol between the
-# JVM and the Python worker) additionally needs google.protobuf; without it
-# the streaming query crashes at initialization even though the API imports.
-# Same gating discipline as the PIL media decoder: the operator is real and
-# unit-tested, the runtime path activates where the dependency exists.
-import importlib.util as _ilu
-
-HAS_TWS_RUNTIME = HAS_TRANSFORM_WITH_STATE and (
-    _ilu.find_spec("google") is not None
-    and _ilu.find_spec("google.protobuf") is not None
-)
-
 __all__ = [
     "fads_generalize_stream",
-    "fads_generalize_stream_tws",
-    "FADSStatefulProcessor",
     "ForeachBatchFADS",
     "HAS_APPLY_IN_PANDAS_WITH_STATE",
-    "HAS_TRANSFORM_WITH_STATE",
-    "HAS_TWS_RUNTIME",
-    "ROCKSDB_PROVIDER",
     "STATE_CODEC_VERSION",
     "encode_state",
     "decode_state",
 ]
-
-# transformWithState requires the RocksDB state store (bundled with Spark 4)
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
 # GroupState value: one binary blob holding the versioned state codec below.
 _STATE_SCHEMA = "blob binary"
@@ -148,16 +112,24 @@ def encode_state(fads: FADSState, pending: pd.DataFrame | None) -> bytes:
             "data": {c: _encode_col(pending[c]) for c in pending.columns},
             "index_col": pending.index.name,
         }
+    live = slice(fads.head, fads.n_clusters)
     doc = {
         "v": STATE_CODEC_VERSION,
         "glo": fads.glo.tolist(),
         "ghi": fads.ghi.tolist(),
         "buffer": [
-            (_py(rid), [float(x) for x in q], int(arr), _py(pid), [float(x) for x in lq])
-            for rid, q, arr, pid, lq in fads.buffer
+            (_py(rid), q, arr, _py(pid), lq)
+            for rid, q, arr, pid, lq in zip(
+                fads.buffer_ids.tolist(),
+                fads.buffer.tolist(),
+                fads.buffer_arrivals.tolist(),
+                fads.buffer_pids.tolist(),
+                fads.buffer_legacy.tolist(),
+            )
         ],
         "clusters": [
-            (c.lo.tolist(), c.hi.tolist(), int(c.created)) for c in fads.clusters
+            (lo, hi, created)
+            for (lo, hi), created in zip(fads.boxes[live].tolist(), fads.created[live].tolist())
         ],
         "last_arrival": int(fads.last_arrival),
         "pending": pend,
@@ -168,8 +140,6 @@ def encode_state(fads: FADSState, pending: pd.DataFrame | None) -> bytes:
 def decode_state(blob: bytes, cfg: FADSConfig) -> tuple[FADSState, pd.DataFrame | None]:
     """Versioned blob -> live state.  ``cfg`` comes from the (current) query
     wiring, never from the checkpoint — config is code, state is data."""
-    from pyfads.fads_core import _Cluster
-
     doc = pickle.loads(blob)
     v = doc.get("v") if isinstance(doc, dict) else None
     if v != STATE_CODEC_VERSION:
@@ -181,14 +151,18 @@ def decode_state(blob: bytes, cfg: FADSConfig) -> tuple[FADSState, pd.DataFrame 
     fads = FADSState(cfg)
     fads.glo = np.asarray(doc["glo"], dtype=np.float64)
     fads.ghi = np.asarray(doc["ghi"], dtype=np.float64)
-    for rid, q, arr, pid, lq in doc["buffer"]:
-        fads.buffer.append(
-            (rid, np.asarray(q, dtype=np.float64), arr, pid, np.asarray(lq, dtype=np.float64))
-        )
-    for lo, hi, created in doc["clusters"]:
-        fads.clusters.append(
-            _Cluster(np.asarray(lo, dtype=np.float64), np.asarray(hi, dtype=np.float64), created)
-        )
+    if doc["buffer"]:
+        rids, qs, arrs, pids, lqs = zip(*doc["buffer"])
+        fads.buffer_ids = np.asarray(rids)
+        fads.buffer = np.asarray(qs, dtype=np.float64)
+        fads.buffer_arrivals = np.asarray(arrs, dtype=np.int64)
+        fads.buffer_pids = np.asarray(pids)
+        fads.buffer_legacy = np.asarray(lqs, dtype=np.float64)
+    if doc["clusters"]:
+        los, his, created = zip(*doc["clusters"])
+        fads.boxes = np.stack((los, his), axis=1).astype(np.float64)
+        fads.created = np.asarray(created, dtype=np.int64)
+        fads.n_clusters = len(created)
     fads.last_arrival = doc["last_arrival"]
     pend = doc["pending"]
     if pend is None:
@@ -215,44 +189,25 @@ def _check_pid_unique(pending: pd.DataFrame, cfg: FADSConfig) -> None:
         )
 
 
-def _release_to_pdf(
-    released, pending: pd.DataFrame, cfg: FADSConfig, out_cols: list[str]
-) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Materialize a ReleasedBatch against the pending-row store.
+def _release(released, pending: pd.DataFrame | None, cfg: FADSConfig, cols):
+    """Resolve released rows by pid against the pending-row store.
 
     Returns (output frame, remaining pending rows).  ``released.row_ids``
     are ``cfg.pid_col`` values (globally unique), so releases may resolve
     rows buffered many micro-batches ago.
     """
-    if not released.row_ids:
-        return pd.DataFrame(columns=out_cols), pending
-    hit = pending.loc[released.row_ids]
-    out = {}
-    for col in pending.columns:
-        if col not in cfg.qid_cols:
-            out[col] = hit[col].to_numpy()
-    lo_m = np.vstack(released.lo)
-    hi_m = np.vstack(released.hi)
-    for j, q in enumerate(cfg.qid_cols):
-        out[f"{q}_lo"] = lo_m[:, j]
-        out[f"{q}_hi"] = hi_m[:, j]
-    remaining = pending.drop(index=released.row_ids)
-    return pd.DataFrame(out)[out_cols], remaining
+    if pending is None:  # nothing ingested, so nothing released
+        return pd.DataFrame(), None
+    pos = pending.index.get_indexer(released.row_ids)
+    out = release_frame(pending, pos, released.lo, released.hi, cfg, cols)
+    keep = np.ones(len(pending), dtype=bool)
+    keep[pos] = False
+    return out, pending[keep]
 
 
-def _out_cols(input_cols: list[str], cfg: FADSConfig) -> list[str]:
-    cols: list[str] = []
-    for c in input_cols:
-        if c in cfg.qid_cols:
-            cols += [f"{c}_lo", f"{c}_hi"]
-        else:
-            cols.append(c)
-    return cols
-
-
-def _ingest_batch(fads, pending, pdf, cfg, out_cols):
-    """The ordering-contract-critical ingest sequence, shared by every
-    streaming driver (G1): restore arrival order within the batch via a
+def _ingest_batch(fads, pending, pdf, cfg, cols):
+    """The ordering-contract-critical ingest sequence, shared by both
+    streaming drivers (G1): restore arrival order within the batch via a
     stable (arrival, pid) mergesort, key the pending store by pid, enforce
     pid uniqueness, run the state machine, materialize releases.
 
@@ -261,25 +216,20 @@ def _ingest_batch(fads, pending, pdf, cfg, out_cols):
     pdf.index = pdf[cfg.pid_col]
     pending = pdf if pending is None else pd.concat([pending, pdf])
     _check_pid_unique(pending, cfg)
-    released = fads.process(
-        pdf[cfg.pid_col].to_numpy(),
-        pdf[list(cfg.qid_cols)].to_numpy(dtype=np.float64),
-        pdf[cfg.arrival_col].to_numpy(dtype=np.int64),
-    )
-    return _release_to_pdf(released, pending, cfg, out_cols)
+    released = process_frame(fads, pdf, pdf[cfg.pid_col].to_numpy())
+    return _release(released, pending, cfg, cols)
 
 
 def make_stream_handler(cfg: FADSConfig, input_cols: list[str], flush_after_ms: int):
     """The applyInPandasWithState handler (exposed for direct unit testing
     with a fake GroupState)."""
-    out_cols = _out_cols(input_cols, cfg)
 
     def handle(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
             # G14: idle timeout == end-of-stream flush (reference close())
             if state.exists:
                 fads, pending = decode_state(state.get[0], cfg)
-                out, _ = _release_to_pdf(fads.flush(), pending, cfg, out_cols)
+                out, _ = _release(fads.flush(), pending, cfg, input_cols)
                 state.remove()
                 if len(out):
                     yield out
@@ -296,7 +246,7 @@ def make_stream_handler(cfg: FADSConfig, input_cols: list[str], flush_after_ms: 
         chunks = [p for p in pdf_iter if len(p)]
         if chunks:
             out, pending = _ingest_batch(
-                fads, pending, pd.concat(chunks, ignore_index=True), cfg, out_cols
+                fads, pending, pd.concat(chunks, ignore_index=True), cfg, input_cols
             )
             if len(out):
                 yield out
@@ -342,100 +292,6 @@ def fads_generalize_stream(
     )
 
 
-class FADSStatefulProcessor(StatefulProcessor):
-    """Spark-4-native FADS operator for ``transformWithStateInPandas``.
-
-    Same semantics as :func:`fads_generalize_stream` (the
-    ``applyInPandasWithState`` path), expressed in the newer
-    stateful-processor API: the versioned codec blob lives in a named
-    ``ValueState`` (RocksDB-backed, changelog-checkpointed), and the
-    end-of-stream flush (G14) is a real per-key processing-time timer
-    re-armed on every input batch instead of a GroupState timeout."""
-
-    def __init__(self, cfg: FADSConfig, input_cols: list[str], flush_after_ms: int):
-        self.cfg = cfg
-        self.out_cols = _out_cols(input_cols, cfg)
-        self.flush_after_ms = flush_after_ms
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self.state = handle.getValueState("fads", _STATE_SCHEMA)
-
-    def _load(self):
-        blob = self.state.get()
-        if blob is None:
-            return FADSState(self.cfg), None
-        return decode_state(blob[0], self.cfg)
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues):
-        cfg = self.cfg
-        fads, pending = self._load()
-        chunks = [p for p in rows if len(p)]
-        if chunks:
-            out, pending = _ingest_batch(
-                fads, pending, pd.concat(chunks, ignore_index=True), cfg, self.out_cols
-            )
-            if len(out):
-                yield out
-        self.state.update((encode_state(fads, pending),))
-        # re-arm the idle-flush timer: one live timer per key
-        for t in self.handle.listTimers():
-            self.handle.deleteTimer(t)
-        self.handle.registerTimer(
-            timerValues.getCurrentProcessingTimeInMs() + self.flush_after_ms
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # G14: idle timer == end-of-stream flush (reference close())
-        blob = self.state.get()
-        if blob is not None:
-            fads, pending = decode_state(blob[0], self.cfg)
-            out, _ = _release_to_pdf(fads.flush(), pending, self.cfg, self.out_cols)
-            self.state.clear()
-            if len(out):
-                yield out
-
-    def close(self) -> None:
-        pass
-
-
-def fads_generalize_stream_tws(
-    df: DataFrame,
-    cfg: FADSConfig,
-    partition_cols: list[str] | None = None,
-    flush_after_ms: int = 60_000,
-) -> DataFrame:
-    """Streaming FADS on the Spark 4 ``transformWithStateInPandas`` operator.
-
-    Identical contract to :func:`fads_generalize_stream`; requires the
-    RocksDB state store provider on the session::
-
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                       ROCKSDB_PROVIDER)
-    """
-    if not HAS_TRANSFORM_WITH_STATE:  # pragma: no cover
-        raise NotImplementedError(
-            "transformWithStateInPandas unavailable; use fads_generalize_stream"
-        )
-    if not HAS_TWS_RUNTIME:
-        raise NotImplementedError(
-            "transformWithState's Python runtime needs google.protobuf, which "
-            "is not installed here; use fads_generalize_stream "
-            "(applyInPandasWithState) — identical semantics, same state codec"
-        )
-    if partition_cols:
-        src, keys = df, list(partition_cols)
-    else:
-        src, keys = df.withColumn("__g", F.lit(1)), ["__g"]
-    proc = FADSStatefulProcessor(cfg, df.columns, flush_after_ms)
-    return src.groupBy(*keys).transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=fads_output_schema(df.schema, cfg),
-        outputMode="append",
-        timeMode="processingTime",
-    )
-
-
 class ForeachBatchFADS:
     """Driver-side streaming FADS via ``foreachBatch`` (SURVEY.md §7.4.2).
 
@@ -462,7 +318,7 @@ class ForeachBatchFADS:
         self.fads = FADSState(cfg)
         self.pending: pd.DataFrame | None = None
         self.outputs: list[pd.DataFrame] = []
-        self._out_cols: list[str] | None = None
+        self._cols: list[str] | None = None
         self._last_batch_id: int | None = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -473,12 +329,12 @@ class ForeachBatchFADS:
         # idempotency idiom is to skip already-seen ids (r11 advice)
         if self._last_batch_id is not None and batch_id <= self._last_batch_id:
             return
-        if self._out_cols is None:
-            self._out_cols = _out_cols(batch_df.columns, cfg)
+        if self._cols is None:
+            self._cols = batch_df.columns
         pdf = batch_df.toPandas()
         if len(pdf):
             out, self.pending = _ingest_batch(
-                self.fads, self.pending, pdf, cfg, self._out_cols
+                self.fads, self.pending, pdf, cfg, self._cols
             )
             if len(out):
                 self.outputs.append(out)
@@ -490,7 +346,7 @@ class ForeachBatchFADS:
 
     def flush(self) -> pd.DataFrame:
         """G14 end-of-stream drain (reference close(), Generalizer.java:59-74)."""
-        out, self.pending = _release_to_pdf(
-            self.fads.flush(), self.pending, self.cfg, self._out_cols or []
+        out, self.pending = _release(
+            self.fads.flush(), self.pending, self.cfg, self._cols
         )
         return out

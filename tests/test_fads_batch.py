@@ -359,31 +359,117 @@ def test_legacy_distance_cols_validation():
                    legacy_distance=True, legacy_distance_cols=("x",))
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [{}, {"distinct_pids": True}, {"legacy_distance": True}],
-    ids=["intended", "distinct_pids", "legacy_distance"],
-)
-def test_fast_engine_bit_identical_to_state(spark, kw):
-    """The batch-specialized inner loop (engine='fast', the default) emits
-    byte-for-byte the same frame as the incremental streaming core
-    (engine='state') in every distance/filter mode."""
-    pdf = _events_pdf(spark)
-    cfg = FADSConfig(
-        k=5,
-        buffer_rows=15,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-        **kw,
+def _chunked_release(pdf, cfg, size):
+    """Feed arrival-sorted rows to one FADSState in chunks of ``size`` rows,
+    then flush; the whole run as one output frame."""
+    from pyfads.fads_batch import process_frame, release_frame
+    from pyfads.fads_core import FADSState
+
+    s = pdf.sort_values([cfg.arrival_col, cfg.pid_col], kind="mergesort")
+    st = FADSState(cfg)
+    pids = s[cfg.pid_col].to_numpy()
+    rels = [
+        process_frame(st, s.iloc[a : a + size], np.arange(a, min(a + size, len(s))),
+                      pids=pids[a : a + size])
+        for a in range(0, len(s), size)
+    ]
+    rels.append(st.flush())
+    return release_frame(
+        s,
+        np.concatenate([r.row_ids for r in rels]),
+        np.vstack([r.lo for r in rels]),
+        np.vstack([r.hi for r in rels]),
+        cfg,
+        s.columns,
     )
-    fast = run_fads_pandas(pdf, cfg, engine="fast")
-    state = run_fads_pandas(pdf, cfg, engine="state")
-    cols = list(fast.columns)
-    assert cols == list(state.columns)
-    pd.testing.assert_frame_equal(
-        fast.sort_values(cols).reset_index(drop=True),
-        state.sort_values(cols).reset_index(drop=True),
-        check_exact=True,
+
+
+_MODES = [
+    {},
+    {"pid_col": "person", "distinct_pids": True},
+    {"legacy_distance": True, "legacy_distance_cols": ("raw0", "raw1")},
+]
+_MODE_IDS = ["intended", "distinct_pids", "legacy_distance"]
+
+
+def _chunking_pdf(n, seed=3):
+    rng = np.random.default_rng(seed)
+    pdf = pd.DataFrame(
+        {
+            "event_id": np.arange(n),
+            "person": rng.integers(0, n // 6, n),
+            "user_id": rng.integers(0, 40, n).astype(float),
+            "value": rng.normal(100, 20, n).round(1),
+            "raw0": rng.uniform(1, 9, n).round(3),
+            "raw1": rng.uniform(1, 9, n).round(3),
+        }
     )
+    # runs of tied arrivals, so ties straddle chunk boundaries too
+    pdf["arrival_ms"] = np.sort(rng.integers(0, n * 40, n)).astype(np.int64)
+    return pdf
+
+
+@pytest.mark.parametrize("kw", _MODES, ids=_MODE_IDS)
+def test_chunking_equivalence(kw):
+    """One engine, any chunking: the same arrival-sorted rows fed to
+    FADSState.process in one call, or in chunks of 1, 7 and 1,000 rows, give
+    the identical frame (rows, order and bits) in every distance/filter
+    mode."""
+    pdf = _chunking_pdf(2_500)
+    cfg = FADSConfig(k=5, buffer_rows=15, reuse_ms=3_000,
+                     qid_cols=("user_id", "value"), arrival_col="arrival_ms",
+                     **{"pid_col": "event_id", **kw})
+    whole = run_fads_pandas(pdf, cfg)
+    assert len(whole) == len(pdf)
+    for size in (1, 7, 1_000):
+        pd.testing.assert_frame_equal(
+            _chunked_release(pdf, cfg, size), whole, check_exact=True
+        )
+
+
+@pytest.mark.parametrize("kw", _MODES, ids=_MODE_IDS)
+def test_chunking_equivalence_dense(kw):
+    """Dense arrivals: more live clusters than the engine's initial cluster
+    capacity (so the arrays grow), and a TTL that expires clusters across
+    chunk boundaries (so full arrays compact instead).  Still identical for
+    every chunking, and identical to the pure-Python oracle."""
+    from pyfads import fads_core
+    from pyfads.fads_batch import process_frame
+
+    pdf = _chunking_pdf(3_000, seed=9)
+    pdf["value"] = np.random.default_rng(9).uniform(0, 1_000, len(pdf))
+    pdf["arrival_ms"] = np.arange(len(pdf), dtype=np.int64)
+    cfg = FADSConfig(k=3, buffer_rows=6, reuse_ms=1_400,
+                     qid_cols=("user_id", "value"), arrival_col="arrival_ms",
+                     **{"pid_col": "event_id", **kw})
+    # row by row, recording each reallocation of the cluster arrays as
+    # (old capacity, clusters kept + the one added)
+    st = fads_core.FADSState(cfg)
+    reallocs = []
+    pids = pdf[cfg.pid_col].to_numpy()
+    for i in range(len(pdf)):
+        created = st.created
+        process_frame(st, pdf.iloc[i : i + 1], [i], pids=pids[i : i + 1])
+        if st.created is not created:
+            reallocs.append((len(created), st.n_clusters))
+    # grew: every cluster kept and more capacity; compacted: expired ones dropped
+    assert any(n - 1 == cap for cap, n in reallocs)
+    assert any(n - 1 < cap for cap, n in reallocs)
+
+    whole = run_fads_pandas(pdf, cfg)
+    for size in (1, 7, 1_000):
+        pd.testing.assert_frame_equal(
+            _chunked_release(pdf, cfg, size), whole, check_exact=True
+        )
+    lcols = list(cfg.legacy_distance_cols or cfg.qid_cols)
+    rows = [
+        (i, tuple(pdf.loc[i, c] for c in cfg.qid_cols), int(pdf.loc[i, "arrival_ms"]),
+         pdf.loc[i, cfg.pid_col], tuple(pdf.loc[i, c] for c in lcols))
+        for i in range(len(pdf))
+    ]
+    expected = fads_oracle(rows, cfg)
+    got = whole.set_index("event_id")
+    for i, (lo, hi) in expected.items():
+        for j, q in enumerate(cfg.qid_cols):
+            assert got.loc[i, f"{q}_lo"] == lo[j]
+            assert got.loc[i, f"{q}_hi"] == hi[j]

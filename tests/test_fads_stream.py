@@ -226,6 +226,39 @@ def test_timeout_flush_drains_buffer(events_pdf):
     pd.testing.assert_frame_equal(b, s, check_dtype=False)
 
 
+def test_stream_legacy_distance_cols_match_batch():
+    """legacy_distance measures kNN distances on ``legacy_distance_cols``;
+    the stream handler must feed those columns to the engine exactly like
+    the batch run does, so stream releases + flush == batch, row for row."""
+    rng = np.random.default_rng(21)
+    n = 200
+    pdf = pd.DataFrame(
+        {
+            "pid": np.arange(n, dtype=np.int64),
+            "x": rng.uniform(0, 50, n).round(2),
+            "y": rng.uniform(10, 200, n).round(2),
+            "rx": rng.uniform(1, 9, n).round(3),
+            "ry": rng.uniform(1, 9, n).round(3),
+            "arr": np.arange(n, dtype=np.int64) * 10,
+        }
+    )
+    cfg = FADSConfig(k=4, buffer_rows=10, reuse_ms=500, qid_cols=("x", "y"),
+                     pid_col="pid", arrival_col="arr",
+                     legacy_distance=True, legacy_distance_cols=("rx", "ry"))
+    handler = make_stream_handler(cfg, list(pdf.columns), 1000)
+    st = FakeState()
+    out = []
+    for a in range(0, n, 50):
+        out += list(handler((1,), iter([pdf.iloc[a : a + 50]]), st))
+    st.hasTimedOut = True
+    out += list(handler((1,), iter([]), st))
+
+    batch = run_fads_pandas(pdf, cfg)
+    b = batch.sort_values("pid").reset_index(drop=True)
+    s = pd.concat(out)[b.columns].sort_values("pid").reset_index(drop=True)
+    pd.testing.assert_frame_equal(b, s, check_dtype=False)
+
+
 def test_foreach_batch_fallback_parity(spark, events_pdf, chunk_dir):
     cfg = _cfg()
     src = (
@@ -279,9 +312,8 @@ def test_stream_state_codec_roundtrip(events_pdf):
     assert len(st2.buffer) == len(st.buffer)
     assert np.array_equal(st2.glo, st.glo)
     assert np.array_equal(st2.ghi, st.ghi)
-    for (r1, q1, a1, p1, l1), (r2, q2, a2, p2, l2) in zip(st.buffer, st2.buffer):
-        assert (r1, a1, p1) == (r2, a2, p2)
-        assert np.array_equal(q1, q2) and np.array_equal(l1, l2)
+    for name in ("buffer_ids", "buffer_arrivals", "buffer_pids", "buffer", "buffer_legacy"):
+        assert np.array_equal(getattr(st2, name), getattr(st, name)), name
     assert len(st2.clusters) == len(st.clusters)
     pd.testing.assert_frame_equal(pending, pending2)
 
@@ -432,132 +464,6 @@ def test_stream_restart_from_checkpoint(spark, events_pdf, tmp_path_factory):
     b = batch.sort_values("event_id").reset_index(drop=True)
     s = got[b.columns].sort_values("event_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(b, s, check_dtype=False)
-
-
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas variant
-# ---------------------------------------------------------------------------
-
-
-class FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def clear(self):
-        self._v = None
-
-
-class FakeHandle:
-    def __init__(self):
-        self.vs = FakeValueState()
-        self.timers: list[int] = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.vs
-
-    def listTimers(self):
-        return list(self.timers)
-
-    def deleteTimer(self, t):
-        self.timers.remove(t)
-
-    def registerTimer(self, ms):
-        self.timers.append(ms)
-
-
-class FakeTimerValues:
-    def __init__(self, now_ms=1_000_000):
-        self._now = now_ms
-
-    def getCurrentProcessingTimeInMs(self):
-        return self._now
-
-
-def test_stateful_processor_parity(events_pdf):
-    """FADSStatefulProcessor (the transformWithStateInPandas operator body)
-    across two input batches + the expired-timer flush equals the batch run
-    row for row, and exactly one flush timer stays armed per key."""
-    from pyfads.fads_stream import FADSStatefulProcessor
-
-    cfg = _cfg()
-    proc = FADSStatefulProcessor(cfg, list(events_pdf.columns), flush_after_ms=1000)
-    handle = FakeHandle()
-    proc.init(handle)
-
-    half = len(events_pdf) // 2
-    tv = FakeTimerValues()
-    out = list(proc.handleInputRows((1,), iter([events_pdf.head(half)]), tv))
-    out += list(proc.handleInputRows((1,), iter([events_pdf.iloc[half:]]), tv))
-    assert handle.timers == [tv.getCurrentProcessingTimeInMs() + 1000]  # re-armed, not stacked
-    out += list(proc.handleExpiredTimer((1,), tv, None))
-    assert handle.vs.get() is None  # state dropped on flush
-
-    batch = run_fads_pandas(events_pdf, cfg)
-    stream_all = pd.concat(out)
-    b = batch.sort_values("event_id").reset_index(drop=True)
-    s = stream_all[b.columns].sort_values("event_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(b, s, check_dtype=False)
-
-
-def test_tws_end_to_end(spark, events_pdf, chunk_dir):
-    """Real transformWithStateInPandas query (RocksDB state store) — runs
-    only where the Python runtime's protobuf dependency exists."""
-    from pyfads.fads_stream import HAS_TWS_RUNTIME, ROCKSDB_PROVIDER, fads_generalize_stream_tws
-
-    cfg = _cfg()
-    if not HAS_TWS_RUNTIME:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            fads_generalize_stream_tws(
-                spark.readStream.schema(spark.createDataFrame(events_pdf.head(1)).schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(chunk_dir),
-                cfg,
-            )
-        pytest.skip("transformWithState runtime needs google.protobuf")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        src = (
-            spark.readStream.schema(spark.createDataFrame(events_pdf.head(1)).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
-        out = fads_generalize_stream_tws(src, cfg, flush_after_ms=4000)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            import time as _t
-
-            deadline = _t.time() + 240
-            while _t.time() < deadline:
-                if spark.table("tws_out").count() >= len(events_pdf):
-                    break
-                _t.sleep(2)
-            got = spark.table("tws_out").toPandas()
-        finally:
-            q.stop()
-        batch = run_fads_pandas(events_pdf, cfg)
-        b = batch.sort_values("event_id").reset_index(drop=True)
-        s = got[b.columns].sort_values("event_id").reset_index(drop=True)
-        pd.testing.assert_frame_equal(b, s, check_dtype=False)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_stream_multibatch_ttl_flush_parity(spark, tmp_path_factory):
